@@ -539,7 +539,7 @@ object MatrixTable {
       : MatrixTable = {
     val (colKey, globals) = NativeFormat.readManifest(spark,
       s"$path/colmeta")
-    val colsDf = spark.read.parquet(s"$path/cols")
+    val colsDf = sources.ParquetInputs.read(spark, s"$path/cols")
     val colRows = colsDf.collect()
       .sortBy(_.getAs[Int]("__col_idx"))
     val colSchema = StructType(

@@ -18,7 +18,7 @@ import graft.operators.Scans
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    sources.ParquetInputs.read(s, s"$dir/$name.parquet")
 
   /** Exact, order-independent sum of a double column (see scaladoc above). */
   private def dsum(c: Column): Column =
@@ -797,7 +797,7 @@ object SparkEntry {
     // --- near-dup clustering: connected components over the minhash
     // pair graph (min-label propagation), one row per clustered doc ------
     "pipe_neardup_clusters" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       val pairs = pipeline.Dedup.minhashPairs(docs, "doc_id", "text")
       pipeline.Dedup.nearDupClusters(pairs)
         .select(col("node").as("doc_id"), col("cluster"))
@@ -1406,7 +1406,7 @@ object SparkEntry {
       val out = java.nio.file.Files
         .createTempDirectory("curation_e2e").toString + "/corpus"
       split.write.partitionBy("split").parquet(out)
-      s.read.parquet(out)
+      sources.ParquetInputs.read(s, out)
         .groupBy(col("split"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("doc_id")).cast("long").as("docid_sum"),
@@ -2502,7 +2502,7 @@ object SparkEntry {
     // bucket kernel; output = distinct candidate pairs, oracled against
     // the SAME md5 band-bucket math in DuckDB --------------------------
     "stream_minhash_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       streaming.StreamDedup.runMinhashPairs(s, s"$dir/documents.parquet",
         docs.schema, "doc_id", "text",
         s"graft_stream_mh_${System.nanoTime()}")
@@ -2513,7 +2513,7 @@ object SparkEntry {
     // bounded by event-time eviction; output = the in-horizon subset of
     // stream_minhash_pairs (ts synthesized as doc_id seconds) --------------
     "stream_minhash_pairs_horizon" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       streaming.StreamDedup.runMinhashPairsHorizon(s,
         s"$dir/documents.parquet", docs.schema, "doc_id", "text",
         s"graft_stream_mhh_${System.nanoTime()}", horizonSec = 100)
@@ -2525,7 +2525,7 @@ object SparkEntry {
     // equal the batch substring join (same oracle as pipe_winnow_pairs —
     // the guarantee theorem holds across micro-batch boundaries too) --------
     "stream_winnow_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       streaming.StreamDedup.runWinnowPairs(s, s"$dir/documents.parquet",
         docs.schema, "doc_id", "text",
         s"graft_stream_wn_${System.nanoTime()}")
@@ -2535,7 +2535,7 @@ object SparkEntry {
     // event-time eviction; output = the in-horizon subset of
     // stream_winnow_pairs (ts synthesized as doc_id seconds) --------------
     "stream_winnow_pairs_horizon" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       streaming.StreamDedup.runWinnowPairsHorizon(s,
         s"$dir/documents.parquet", docs.schema, "doc_id", "text",
         s"graft_stream_wh_${System.nanoTime()}", horizonSec = 100)
@@ -2545,7 +2545,7 @@ object SparkEntry {
     // document stream, complete-mode grouped agg (state = one row per
     // language) — oracled against the same profile in DuckDB ---------------
     "stream_lang_profile" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       streaming.StreamText.runLangProfile(s, s"$dir/documents.parquet",
         docs.schema, "doc_id", "text",
         s"graft_stream_lp_${System.nanoTime()}")
@@ -2557,7 +2557,7 @@ object SparkEntry {
     // exactly, which is what this oracle (= pipe_exact_decontam's)
     // checks ------------------------------------------------------------------
     "stream_decontam" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       val bench = docs.filter(pmod(col("doc_id"), lit(97L)) === 3L)
         .select((col("doc_id") + 1000000L).as("bench_id"),
           substring(col("text"), 21, 200).as("text"))
@@ -2572,7 +2572,7 @@ object SparkEntry {
     // micro-batch — no state, no watermark; output equals the batch
     // operator (shared oracle) ----------------------------------------------
     "stream_temperature_mix" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       streaming.StreamText.runTemperatureMix(s,
         s"$dir/documents.parquet", docs.schema, "doc_id", "lang",
         budgetDiv = 10, alpha = 0.5, "graft_stream_tmx")
@@ -3097,7 +3097,7 @@ object SparkEntry {
     // --- native-format EXPORT: write a reference-readable .ht/.mt and
     // re-import it through the independent decoder ---------------------------
     "ht_export" -> ((s, dir) => {
-      val t = Table(s.read.parquet(s"$dir/nation.parquet"),
+      val t = Table(SparkEntry.t(s, dir, "nation"),
         Seq("n_nationkey"), Map("source" -> "tpch"))
       val out = java.nio.file.Files.createTempDirectory("graft_htex")
       sources.HailNativeWrite.writeTable(t, s"$out/nation.ht")

@@ -552,7 +552,7 @@ final case class Table(
     val fileRanges: Seq[(String, Any, Any)] =
       if (key.isEmpty) Nil
       else NativeFormat.footerKeyRanges(spark, s"$path/rows", key.head)
-        .getOrElse(spark.read.parquet(s"$path/rows")
+        .getOrElse(sources.ParquetInputs.read(spark, s"$path/rows")
           .groupBy(input_file_name().as("__f"))
           .agg(min(col(key.head)).as("__lo"), max(col(key.head)).as("__hi"))
           .collect()
@@ -617,8 +617,13 @@ object Table {
           math.max(openCost, bytesPerCore))
       }
       if (!files.forall(f => sizes.get(f._1).exists(unsplit))) None
-      else Some(files.map(f => spark.read.parquet(s"$rowsDir/${f._1}"))
-        .reduce(_.unionByName(_)))
+      else {
+        // one schema for the directory, not one inference per part file
+        val schema = sources.ParquetInputs.schema(spark, rowsDir)
+        Some(files.map(f => sources.ParquetInputs.readAs(spark, schema,
+            s"$rowsDir/${f._1}"))
+          .reduce(_.unionByName(_)))
+      }
     }
   }
 
@@ -639,8 +644,8 @@ object Table {
     ordered match {
       case Some(df) => Table(df, key, globals, keySorted = true)
       case None =>
-        Table(spark.read.parquet(s"$path/rows"), key, globals,
-          keySorted = false)
+        Table(sources.ParquetInputs.read(spark, s"$path/rows"), key,
+          globals, keySorted = false)
     }
   }
 
@@ -690,12 +695,13 @@ object Table {
         case (_, lo, hi) => lo == null || hi == null || keep(lo, hi)
       }
       if (matching.isEmpty)
-        Table(spark.read.parquet(s"$path/rows").filter(lit(false)),
-          key, globals, keySorted = false)
+        Table(sources.ParquetInputs.read(spark, s"$path/rows")
+            .filter(lit(false)), key, globals, keySorted = false)
       else orderedRead(spark, s"$path/rows", matching) match {
         case Some(df) => Table(df, key, globals, keySorted = true)
         case None =>
-          Table(spark.read.parquet(
+          Table(sources.ParquetInputs.readAs(spark,
+              sources.ParquetInputs.schema(spark, s"$path/rows"),
               matching.map(f => s"$path/rows/${f._1}"): _*),
             key, globals, keySorted = false)
       }
@@ -740,7 +746,7 @@ object Table {
   }
 
   def fromParquet(spark: SparkSession, path: String, key: String*): Table =
-    Table(spark.read.parquet(path), key)
+    Table(sources.ParquetInputs.read(spark, path), key)
 }
 
 private[graft] object NativeFormat {

@@ -7,6 +7,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetInputs
+
 /** Distributed block matrix API (reference `linalg/BlockMatrix.scala`,
   * IR ops `expr/ir/BlockMatrixIR.scala:265-916`): element-wise map/map2,
   * matmul, transpose, scalar reductions, band/rectangle sparsification,
@@ -463,10 +465,10 @@ object BlockMatrix {
     * sidecar and every stored block maps straight back into place —
     * no shuffle, no entry explosion. */
   def load(spark: SparkSession, path: String): BlockMatrix = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = ParquetInputs.read(spark, s"$path/meta").head()
     val (nr, nc, rpb, cpb) = (meta.getLong(0), meta.getLong(1),
       meta.getInt(2), meta.getInt(3))
-    val blocks = spark.read.parquet(s"$path/blocks").rdd.map { r =>
+    val blocks = ParquetInputs.read(spark, s"$path/blocks").rdd.map { r =>
       ((r.getInt(0), r.getInt(1)),
         Matrices.dense(r.getInt(2), r.getInt(3),
           r.getSeq[Double](4).toArray)

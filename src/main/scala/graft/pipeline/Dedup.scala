@@ -490,9 +490,9 @@ object Dedup {
     * 1.69e9 pair incidences at sf10, 1.3e9 of them from 14k hot
     * buckets of 100-3500 docs, all UNDER the 10k cap — and its
     * localCheckpoint alone filled a 73 GB block manager. The round-11
-    * diagnosis blamed the verification join; the r12 WinnowDiag
-    * measurement shows the candidate materialization is the real
-    * floor.
+    * diagnosis blamed the verification join; an r12 one-off
+    * measurement (the since-removed `tools/WinnowDiag`) showed the
+    * candidate materialization is the real floor.
     *
     * The bounded plan keeps only output-scaled or doc-scaled frames:
     *  1. candidate DOCS derive LINEARLY from bucket sizes (a doc is in

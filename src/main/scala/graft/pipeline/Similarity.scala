@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetInputs
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Baseline: brute-force cosine top-k — one narrow pass, no shuffle except
@@ -408,7 +410,7 @@ object Similarity {
     * cosine-descending with id tiebreak. */
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, query: Seq[Float], k: Int, nProbe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = ParquetInputs.read(spark, s"$path/centroids").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toIndexedSeq,
         r.getLong(2)))
     require(cents.nonEmpty, "empty centroid table")
@@ -431,7 +433,7 @@ object Similarity {
       (num.toDouble / (n.toDouble * n.toDouble), c)
     }.sortBy(identity).take(nProbe).map(_._2)
     val qVec = array(query.map(lit): _*)
-    spark.read.parquet(s"$path/vectors")
+    ParquetInputs.read(spark, s"$path/vectors")
       .filter(col("cell").isin(probes: _*))
       .withColumn("cos", cosine(col("vec"), qVec))
       .select(col("id"), col("cos"))

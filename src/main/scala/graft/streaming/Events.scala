@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.{DataType, DecimalType, LongType,
   StructType, TimestampNTZType, TimestampType}
 
+import graft.sources.ParquetInputs
+
 /** Structured Streaming over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props).
   *
@@ -209,21 +211,41 @@ object Events {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         ds.toDF().schema)
-    else spark.read.parquet(out)
+    else ParquetInputs.read(spark, out)
   }
 
-  /** The file stream source wants a DIRECTORY: stage a single file
-    * behind a symlink in a temp dir (no copy); directories pass
-    * through. Shared by every streaming parity runner. */
-  private[graft] def stageAsDir(path: String, prefix: String): String =
-    if (new java.io.File(path).isDirectory) path
-    else {
-      val d = java.nio.file.Files.createTempDirectory(prefix)
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(new java.io.File(path).getName),
-        java.nio.file.Path.of(path))
-      d.toString
+  /** The file stream source wants a DIRECTORY: run `body` on `path`
+    * itself when it is one, else on a temp dir holding a symlink to the
+    * file (no copy). The temp dir is deleted when `body` returns or
+    * throws, so `body` must stop its query first and its result must
+    * not read the staged dir. Shared by every streaming parity runner. */
+  private[graft] def withStagedDir[A](path: String, prefix: String)(
+      body: String => A): A = {
+    val src = new java.io.File(path)
+    if (src.isDirectory) body(path)
+    else withLinkedDir(prefix, Seq(src))(body)
+  }
+
+  /** Run `body` on a fresh temp dir holding one symlink per file, then
+    * delete the dir with everything `body` wrote into it. `Files.walk`
+    * does not follow links, so links go as links and their targets are
+    * never touched. */
+  private def withLinkedDir[A](prefix: String,
+      files: Seq[java.io.File])(body: String => A): A = {
+    import java.nio.file.{Files, Path}
+    val dir = Files.createTempDirectory(prefix)
+    try {
+      files.foreach(f => Files.createSymbolicLink(dir.resolve(f.getName),
+        f.getAbsoluteFile.toPath))
+      body(dir.toString)
+    } finally {
+      val all = Files.walk(dir)
+      // children sort after their parent: reversed, they go first
+      try all.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally all.close()
     }
+  }
 
   /** Run the streaming side to completion over a static directory and
     * return the result (complete-mode memory sink) — used by the parity
@@ -234,17 +256,18 @@ object Events {
       // retention the watermark admits: 2 stores hold it (sizing
       // rationale on withStatePartitions)
       numStatePartitions: Int = 2): DataFrame = {
-    val streamDir = stageAsDir(path, "graft_stream")
-    withStatePartitions(spark, numStatePartitions) {
-      val q = hourlyTypeAgg(readEventStream(spark, streamDir, schema,
-        maxFilesPerTrigger = filesPerTrigger(streamDir)))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    withStagedDir(path, "graft_stream") { streamDir =>
+      withStatePartitions(spark, numStatePartitions) {
+        val q = hourlyTypeAgg(readEventStream(spark, streamDir, schema,
+          maxFilesPerTrigger = filesPerTrigger(streamDir)))
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Complete())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName)
   }
@@ -432,19 +455,20 @@ object Events {
       // corpus scale): 2 stores hold it; every extra store is one more
       // per-batch delta-file commit (withStatePartitions scaladoc)
       numStatePartitions: Int = 2): DataFrame = {
-    val dir = stageAsDir(path, "graft_sqtl")
-    withStatePartitions(spark, numStatePartitions) {
-      val q = readEventStream(spark, dir, schema,
-          maxFilesPerTrigger = filesPerTrigger(dir))
-        .groupBy(col("event_type"))
-        .agg(graft.operators.Aggs.approxCdf(col("value"), k).as("cdf"))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    withStagedDir(path, "graft_sqtl") { dir =>
+      withStatePartitions(spark, numStatePartitions) {
+        val q = readEventStream(spark, dir, schema,
+            maxFilesPerTrigger = filesPerTrigger(dir))
+          .groupBy(col("event_type"))
+          .agg(graft.operators.Aggs.approxCdf(col("value"), k).as("cdf"))
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Complete())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName).select(col("event_type"),
       graft.operators.Aggs.sketchQuantileUdf(col("cdf"), lit(0.5))
@@ -461,7 +485,7 @@ object Events {
       k, numStatePartitions)
     // exact rank of each estimate against the full data — one scan,
     // broadcast of the tiny per-group estimate table
-    spark.read.parquet(path)
+    ParquetInputs.read(spark, path)
       .select(col("event_type"), col("value"))
       .filter(col("value").isNotNull)
       .join(broadcast(est), Seq("event_type"))
@@ -506,27 +530,28 @@ object Events {
       // state = ONE global Misra-Gries summary row: a single store
       // holds it (sizing rationale on withStatePartitions)
       numStatePartitions: Int = 1): DataFrame = {
-    val dir = stageAsDir(path, "graft_shh")
-    withStatePartitions(spark, numStatePartitions) {
-      val q = readEventStream(spark, dir, schema,
-          maxFilesPerTrigger = filesPerTrigger(dir))
-        .select(keyExpr.as("key"))
-        .agg(udaf(graft.operators.Aggs.misraGriesAgg(m))
-            .apply(col("key")).as("cand"),
-          count(col("key")).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    withStagedDir(path, "graft_shh") { dir =>
+      withStatePartitions(spark, numStatePartitions) {
+        val q = readEventStream(spark, dir, schema,
+            maxFilesPerTrigger = filesPerTrigger(dir))
+          .select(keyExpr.as("key"))
+          .agg(udaf(graft.operators.Aggs.misraGriesAgg(m))
+              .apply(col("key")).as("cand"),
+            count(col("key")).as("n"))
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Complete())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     // exact second pass: count ONLY the <= m streamed candidates (the
     // shuffle carries at most m distinct keys after the map-side
     // broadcast filter), keep exact count strictly above N/m
     val summary = spark.table(sinkName)
-    spark.read.parquet(path)
+    ParquetInputs.read(spark, path)
       .select(keyExpr.as("key"))
       .crossJoin(broadcast(summary))
       .filter(array_contains(col("cand"), col("key")))
@@ -559,7 +584,6 @@ object Events {
   def runDedupStream(spark: SparkSession, path: String,
       schema: StructType, idCols: Seq[String], sinkName: String,
       numStatePartitions: Int = 8): DataFrame = {
-    val streamDir = stageAsDir(path, "graft_stream_dd")
     // exact-parity harness: process the whole input as ONE micro-batch.
     // With per-file triggers, a key whose only occurrences sit >1h
     // behind a later file's max event time would be dropped as late by
@@ -575,16 +599,16 @@ object Events {
       val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
       val prevN = spark.conf.getOption(nKey)
       spark.conf.set(nKey, "false")
-      try {
-      val q = dedupStream(readEventStream(spark, streamDir, schema,
-        maxFilesPerTrigger = Int.MaxValue), idCols)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      try withStagedDir(path, "graft_stream_dd") { streamDir =>
+        val q = dedupStream(readEventStream(spark, streamDir, schema,
+          maxFilesPerTrigger = Int.MaxValue), idCols)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append())
+          .start()
+        q.processAllAvailable()
+        q.stop()
       } finally prevN match {
         case Some(v) => spark.conf.set(nKey, v)
         case None    => spark.conf.unset(nKey)
@@ -710,21 +734,7 @@ object Events {
   def runSessionizeStream(spark: SparkSession, path: String,
       schema: StructType, gapNs: Long, sinkName: String,
       numStatePartitions: Int = 8): DataFrame = {
-    // ALWAYS stage into a fresh temp dir (even for directory sources):
-    // the sentinel below is appended to the staged dir, never the source
-    val dir = {
-      val d = java.nio.file.Files.createTempDirectory("graft_sess")
-      val src = new java.io.File(path)
-      val files =
-        if (src.isDirectory)
-          src.listFiles().filter(f => f.isFile &&
-            !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        else Array(src)
-      files.foreach(f => java.nio.file.Files.createSymbolicLink(
-        d.resolve(f.getName), f.toPath))
-      d.toString
-    }
-    val batch = spark.read.parquet(path)
+    val batch = ParquetInputs.read(spark, path)
     val dt = batch.schema("ts").dataType
     val maxRow = batch.select(max(tsNanos(col("ts"), dt))).head()
     if (maxRow.isNullAt(0)) {
@@ -735,25 +745,35 @@ object Events {
     }
     val maxNs = maxRow.getLong(0)
     val sentinelNs = maxNs + 2L * gapNs + 3600L * 1000000000L
-    withStatePartitions(spark, numStatePartitions) {
-      val q = sessionizeStream(
-        readEventStream(spark, dir, schema,
-          maxFilesPerTrigger = Int.MaxValue), gapNs)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      // append the sentinel AFTER the data batch so it can never drag
-      // the watermark ahead of real events
-      batch.limit(1)
-        .withColumn("event_id", lit(-1L))
-        .withColumn("user_id", lit(-1L))
-        .withColumn("ts", tsFromNanos(lit(sentinelNs), dt))
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      q.stop()
+    // ALWAYS stage into a fresh temp dir (even for directory sources):
+    // the sentinel below is appended to the staged dir, never the source
+    val src = new java.io.File(path)
+    val files =
+      if (src.isDirectory)
+        src.listFiles().filter(f => f.isFile &&
+          !f.getName.startsWith("_") && !f.getName.startsWith(".")).toSeq
+      else Seq(src)
+    withLinkedDir("graft_sess", files) { dir =>
+      withStatePartitions(spark, numStatePartitions) {
+        val q = sessionizeStream(
+          readEventStream(spark, dir, schema,
+            maxFilesPerTrigger = Int.MaxValue), gapNs)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append())
+          .start()
+        q.processAllAvailable()
+        // append the sentinel AFTER the data batch so it can never drag
+        // the watermark ahead of real events
+        batch.limit(1)
+          .withColumn("event_id", lit(-1L))
+          .withColumn("user_id", lit(-1L))
+          .withColumn("ts", tsFromNanos(lit(sentinelNs), dt))
+          .write.mode("append").parquet(dir)
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName).filter(col("user_id") =!= -1L)
   }

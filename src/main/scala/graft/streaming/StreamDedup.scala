@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.ParquetInputs
+
 /** Streaming near-duplicate detection — the live-ingestion form of
   * `pipeline.Dedup.minhashPairs`: documents arrive on a stream, band
   * signatures are computed per micro-batch, and a per-bucket state of
@@ -315,27 +317,28 @@ object StreamDedup {
       id: String, text: String, sinkName: String, horizonSec: Long,
       latenessMs: Long = 365L * 24 * 3600 * 1000,
       k: Int = 16, w: Int = 4, numStatePartitions: Int = 32): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_swh")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-      .withColumn("__ingest",
-        timestamp_seconds(col(id).cast("long")))
-    Events.withLargeState(spark, numStatePartitions) {
-      val q = winnowPairsStreamHorizon(stream, id, text, "__ingest",
-        horizonSec * 1000, latenessMs, k, w)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Events.withStagedDir(path, "graft_swh") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+        .withColumn("__ingest",
+          timestamp_seconds(col(id).cast("long")))
+      Events.withLargeState(spark, numStatePartitions) {
+        val q = winnowPairsStreamHorizon(stream, id, text, "__ingest",
+          horizonSec * 1000, latenessMs, k, w)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     graft.pipeline.Dedup.verifySharedRuns(
       spark.table(sinkName).distinct(),
-      spark.read.parquet(path)
+      ParquetInputs.read(spark, path)
         .withColumn(id, org.apache.spark.sql.functions.col(id)
           .cast("long")),
       id, text, k + w - 1)
@@ -352,23 +355,24 @@ object StreamDedup {
       id: String, text: String, sinkName: String, horizonSec: Long,
       latenessMs: Long = 365L * 24 * 3600 * 1000,
       family: String = "md5", numStatePartitions: Int = 8): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_smhh")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-      .withColumn("__ingest",
-        timestamp_seconds(col(id).cast("long")))
-    Events.withStatePartitions(spark, numStatePartitions) {
-      val q = minhashPairsStreamHorizon(stream, id, text, "__ingest",
-        horizonSec * 1000, latenessMs, family = family)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Events.withStagedDir(path, "graft_smhh") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+        .withColumn("__ingest",
+          timestamp_seconds(col(id).cast("long")))
+      Events.withStatePartitions(spark, numStatePartitions) {
+        val q = minhashPairsStreamHorizon(stream, id, text, "__ingest",
+          horizonSec * 1000, latenessMs, family = family)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName).distinct()
   }
@@ -381,22 +385,23 @@ object StreamDedup {
       path: String, schema: org.apache.spark.sql.types.StructType,
       id: String, text: String, sinkName: String,
       family: String = "md5", numStatePartitions: Int = 8): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_smh")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    // state partitions sized to state volume, not cores — see
-    // Events.withStatePartitions
-    Events.withStatePartitions(spark, numStatePartitions) {
-      val q = minhashPairsStream(stream, id, text, family = family)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Events.withStagedDir(path, "graft_smh") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+      // state partitions sized to state volume, not cores — see
+      // Events.withStatePartitions
+      Events.withStatePartitions(spark, numStatePartitions) {
+        val q = minhashPairsStream(stream, id, text, family = family)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName).distinct()
   }
@@ -415,23 +420,24 @@ object StreamDedup {
       path: String, schema: org.apache.spark.sql.types.StructType,
       id: String, text: String, sinkName: String,
       k: Int = 16, w: Int = 4, numStatePartitions: Int = 32): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_swn")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    // one state row per FINGERPRINT (~0.4/normalized char) — millions of
-    // keys at any real corpus slice, the large-state regime
-    val candidates = Events.withLargeState(spark, numStatePartitions) {
-      Events.drainToParquet(
-        winnowPairsStream(stream, id, text, k, w), sinkName)
+    val candidates = Events.withStagedDir(path, "graft_swn") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+      // one state row per FINGERPRINT (~0.4/normalized char) — millions
+      // of keys at any real corpus slice, the large-state regime
+      Events.withLargeState(spark, numStatePartitions) {
+        Events.drainToParquet(
+          winnowPairsStream(stream, id, text, k, w), sinkName)
+      }
     }
     // pre-cast the id to long on the batch read: the streamed candidate
     // pairs are typed long (CandidatePair), and verifySharedRuns joins
     // ids as-is by contract
     graft.pipeline.Dedup.verifySharedRuns(
       candidates.distinct(),
-      spark.read.parquet(path)
+      ParquetInputs.read(spark, path)
         .withColumn(id, org.apache.spark.sql.functions.col(id)
           .cast("long")),
       id, text, k + w - 1)

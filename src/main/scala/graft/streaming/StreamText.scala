@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.pipeline.Text
+import graft.sources.ParquetInputs
 
 /** Streaming corpus profiling: the `pipeline.Text` feature kernels are
   * pure codegen'd Column expressions, so they lift onto a Structured
@@ -49,20 +50,21 @@ object StreamText {
       // scale): 2 stores hold it; every extra store is one more
       // per-batch delta-file commit (Events.withStatePartitions doc)
       numStatePartitions: Int = 2): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_stxt")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    Events.withStatePartitions(spark, numStatePartitions) {
-      val q = langProfile(stream, id, text)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Events.withStagedDir(path, "graft_stxt") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+      Events.withStatePartitions(spark, numStatePartitions) {
+        val q = langProfile(stream, id, text)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Complete())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName)
   }
@@ -108,22 +110,23 @@ object StreamText {
         graft.pipeline.Text.tokens(col(benchText)), n, "decon"))
         .as("h"))
       .distinct().collect().map(_.getLong(0))
-    val dir = Events.stageAsDir(path, "graft_sdec")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    // stateless guard, but each micro-batch still writes offset/commit
-    // WAL files — skip the double-checksum ops on the temp checkpoint
-    Events.withReplayCheckpointConf(spark) {
-      val q = decontamStream(stream, id, text, benchHashes, n)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Events.withStagedDir(path, "graft_sdec") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+      // stateless guard, but each micro-batch still writes offset/commit
+      // WAL files — skip the double-checksum ops on the temp checkpoint
+      Events.withReplayCheckpointConf(spark) {
+        val q = decontamStream(stream, id, text, benchHashes, n)
+          .writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
     spark.table(sinkName)
   }
@@ -156,18 +159,19 @@ object StreamText {
       path: String, schema: org.apache.spark.sql.types.StructType,
       id: String, stratum: String, budgetDiv: Long, alpha: Double,
       sinkName: String): DataFrame = {
-    val batch = spark.read.parquet(path)
+    val batch = ParquetInputs.read(spark, path)
     val rates = graft.pipeline.Sampling.temperatureRates(batch, stratum,
       expr(s"__ntot div CAST($budgetDiv AS BIGINT)"), alpha)
       .localCheckpoint(false)
-    val dir = Events.stageAsDir(path, "graft_stmx")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    Events.drainToParquet(
-      temperatureMixStream(stream, id, stratum, rates)
-        .select(col(id), col(stratum)),
-      sinkName)
+    Events.withStagedDir(path, "graft_stmx") { dir =>
+      val stream = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
+        .parquet(dir)
+      Events.drainToParquet(
+        temperatureMixStream(stream, id, stratum, rates)
+          .select(col(id), col(stratum)),
+        sinkName)
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetInputs
+
 /** Scale-factor multiplier for the benchmark corpus: reads the driver's
   * sf0.1 tables and writes an N× corpus (default 10× = "sf1") that
   * preserves the join graph and the statistical profile:
@@ -41,7 +43,8 @@ object GenScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def rd(t: String): DataFrame = spark.read.parquet(s"$in/$t.parquet")
+    def rd(t: String): DataFrame =
+      ParquetInputs.read(spark, s"$in/$t.parquet")
     def wr(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite")
         .parquet(s"$out/$t.parquet")

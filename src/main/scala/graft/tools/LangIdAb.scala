@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetInputs
+
 /** A/B measurement for the stopword-voting kernels (guide §1 / §4):
   * `array_intersect(tokens, lit-array)` evaluates INTERPRETED inside
   * the codegen'd projection (ArrayIntersect's non-primitive path calls
@@ -64,7 +66,7 @@ object LangIdAb {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
 
     def timeIt(label: String, df: => DataFrame): Double = {
       val samples = (1 to 5).map { _ =>

@@ -46,7 +46,7 @@ object PpjoinAnatomy {
       (r, (System.nanoTime() - t0) / 1e9)
     }
 
-    val df = spark.read.parquet(s"$dir/documents.parquet")
+    val df = graft.sources.ParquetInputs.read(spark, s"$dir/documents.parquet")
 
     // PPJOIN_FULLOP=1: time the real operator end-to-end with a
     // per-stage listener + plan dump (ReusedExchange visibility),

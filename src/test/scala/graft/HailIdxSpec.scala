@@ -32,6 +32,20 @@ class HailIdxSpec extends SparkSpec {
   private val Base =
     "/root/reference/hail/hail/test/resources/backward_compatability/1.1.0"
 
+  /** The entries of a legacy fixture directory. Fails, naming the
+    * directory, when the external fixture tree is absent: these
+    * fixtures are not committed yet (ROADMAP open item 0, "Make Tier-1
+    * green and hermetic"), and the test must stay visibly red rather
+    * than cancel. */
+  private def fixtureDir(dir: String): Array[File] = {
+    val kids = new File(dir).listFiles()
+    if (kids == null)
+      fail(s"legacy 1.1.0 fixture directory $dir is missing: the " +
+        "fixtures are external until ROADMAP open item 0 commits them " +
+        "under src/test/resources")
+    kids
+  }
+
   private def fs: FileSystem = new HPath("/").getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
@@ -136,7 +150,7 @@ class HailIdxSpec extends SparkSpec {
 
   test("legacy 1.1.0 table .idx fixtures decode; keys and offsets " +
     "match the rows component") {
-    val dirs = new File(s"$Base/table").listFiles()
+    val dirs = fixtureDir(s"$Base/table")
       .filter(_.getName.endsWith(".ht")).sortBy(_.getName)
     assert(dirs.nonEmpty, "no 1.1.0 table fixtures found")
     var checkedParts = 0
@@ -150,7 +164,7 @@ class HailIdxSpec extends SparkSpec {
 
   test("legacy 1.1.0 matrix_table .idx fixtures decode; keys, row " +
     "offsets AND entries_offset annotations pin to both components") {
-    val dirs = new File(s"$Base/matrix_table").listFiles()
+    val dirs = fixtureDir(s"$Base/matrix_table")
       .filter(_.getName.endsWith(".hmt")).sortBy(_.getName)
     assert(dirs.nonEmpty, "no 1.1.0 matrix_table fixtures found")
     dirs.foreach { hmt =>

@@ -545,4 +545,25 @@ class StreamingSpec extends SparkSpec {
     assert(dirs.forall(_.getName.startsWith("blockmgr-")))
     assert(dirs.forall(_.isDirectory))
   }
+
+  test("streaming runners leave no staging dir behind") {
+    import graft.streaming.StreamText
+    // single-file inputs are staged behind a symlink in a temp dir; the
+    // sessionizer always stages (its sentinel lands there)
+    val prefixes = Seq("graft_stxt", "graft_sess")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged(): Set[String] = tmp.list()
+      .filter(n => prefixes.exists(n.startsWith)).toSet
+    val before = staged()
+    val docs = s"$sfDir/documents.parquet"
+    StreamText.runLangProfile(spark, docs, spark.read.parquet(docs).schema,
+      "doc_id", "text", "spec_stage_lp").collect()
+    val events = s"$sfDir/events.parquet"
+    Events.runSessionizeStream(spark, events,
+      spark.read.parquet(events).schema, 1800L * 1000000000L,
+      "spec_stage_sess").collect()
+    assert(staged() -- before == Set.empty[String])
+    assert(new java.io.File(docs).isFile && new java.io.File(events).isFile,
+      "staging cleanup must never touch the link targets")
+  }
 }
